@@ -57,3 +57,32 @@ def test_no_dataframe_cache_leak(spark, sf_dir, name):
         f"accumulates storage until OOM; pair the persist with unpersist "
         f"or use localCheckpoint()"
     )
+
+
+def test_cached_results_persist_count_stays_flat(spark, tmp_path):
+    """The results cache holds no persisted plan: serving distinct query
+    batches leaves the session's persistent-RDD count where it was."""
+    from warp_pipes_spark.search.bm25 import Bm25Search
+    from warp_pipes_spark.search.cached import cached_results
+
+    docs = spark.createDataFrame(
+        [(i, f"tok{i % 7} tok{i % 3} alpha beta") for i in range(40)],
+        ["doc_id", "text"],
+    )
+    eng = Bm25Search(corpus=docs, k=5, index_cache_dir=str(tmp_path / "bm25"))
+    cache = str(tmp_path / "results")
+
+    def serve(b):
+        qs = spark.createDataFrame(
+            [(b * 10 + q, f"tok{(b + q) % 7} alpha") for q in range(3)],
+            ["query_id", "text"],
+        )
+        cached_results(eng, qs, cache_dir=cache).collect()
+
+    serve(0)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for b in range(1, 4):
+        serve(b)
+    # a leak grows the count; it may shrink meanwhile, when an earlier
+    # write-behind publish (an index artifact) releases its persist
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before

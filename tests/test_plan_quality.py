@@ -555,3 +555,77 @@ def test_round5_operators_plan_shapes(spark, sf_dir):
         if name != "q193_source_divergence":
             assert "BroadcastNestedLoop" not in plan, name
         assert "CartesianProduct" not in plan, name
+
+
+def test_serve_batch_job_budget(spark, tmp_path):
+    """A hybrid query batch through the results cache runs few Spark
+    jobs: the batch is made local once, BM25's threshold and fan-out
+    estimate come from the driver, dense scoring reads the query count
+    from the plan instead of probing it, and the cache runs the fused
+    plan once and publishes from the driver. Budget: <= 10 jobs for a fresh batch over a warm index,
+    <= 3 for an exact repeat. Jobs are counted by job group."""
+    import zlib
+
+    from warp_pipes_spark.search.bm25 import Bm25Search
+    from warp_pipes_spark.search.cached import cached_results
+    from warp_pipes_spark.search.dense import DenseSearch
+    from warp_pipes_spark.search.index import Index
+
+    words = [f"w{i}" for i in range(60)]
+
+    def embed(text):
+        v = [0.0] * 8
+        for t in text.split():
+            v[zlib.crc32(t.encode()) % 8] += 1.0
+        return v
+
+    texts = [" ".join(words[(i * 7 + j * j) % 60] for j in range(12)) for i in range(300)]
+    docs_path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, t, embed(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, vector array<double>",
+    ).write.parquet(docs_path)
+    docs = spark.read.parquet(docs_path)
+
+    def batch(b):
+        path = str(tmp_path / f"q{b}.parquet")
+        qtexts = [" ".join(words[(b * 16 + q) * 5 % 60 + j] for j in range(3))
+                  for q in range(16)]
+        spark.createDataFrame(
+            [(b * 100 + q, t, embed(t)) for q, t in enumerate(qtexts)],
+            "query_id long, text string, embedding array<double>",
+        ).write.parquet(path)
+        return spark.read.parquet(path)
+
+    index = Index(
+        corpus=docs,
+        engines=[
+            Bm25Search(corpus=docs, k=10, index_cache_dir=str(tmp_path / "bm25")),
+            DenseSearch(docs.select("doc_id", "vector"), k=10, corpus_id="doc_id",
+                        corpus_vec="vector", query_id="query_id",
+                        query_vec="embedding"),
+        ],
+        k=10, merge_previous_results=True, merge_strategy="rrf",
+    )
+    cache = str(tmp_path / "results")
+    for b in range(2):  # warm: index, seed and df artifacts built
+        cached_results(index, batch(b), cache_dir=cache).collect()
+
+    sc = spark.sparkContext
+
+    def jobs(queries, label):
+        group = f"serve-budget-{label}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = cached_results(index, queries, cache_dir=cache).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    fresh = batch(2)
+    n_fresh, rows = jobs(fresh, "fresh")
+    assert len(rows) == 160 and {r["rank"] for r in rows} == set(range(1, 11))
+    assert n_fresh <= 10, f"fresh batch ran {n_fresh} Spark jobs"
+    n_repeat, again = jobs(fresh, "repeat")
+    assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
+    assert n_repeat <= 3, f"repeated batch ran {n_repeat} Spark jobs"

@@ -155,30 +155,31 @@ def test_cached_results_bit_equal_and_reused(spark, sf_dir, tmp_path):
         F.substring("text", 1, 40).alias("text"),
     )
     pipe = Bm25Search(corpus=docs, k=5)
-    direct = sorted(map(tuple, pipe(qs).collect()))
+    direct_df = pipe(qs)
+    direct = sorted(map(tuple, direct_df.collect()))
     cache = str(tmp_path / "results")
-    first = sorted(
-        map(tuple, cached_results(pipe, qs, cache_dir=cache).collect())
-    )
+    first_df = cached_results(pipe, qs, cache_dir=cache)
+    # a miss runs the plan once and hands back the rows as a local relation
+    assert first_df.isLocal()
+    first = sorted(map(tuple, first_df.collect()))
     # the store pass must be bit-identical to the direct run
     assert first == direct
     # second call must serve the SAME parquet entry (exactly one cache
-    # dir), still bit-identical. Stores are write-behind since round 9
-    # (guide §2.6 overlap), so wait for the async publish before
-    # asserting on-disk state — without this the first listdir can count
-    # the in-flight staging dir as the entry, the second call then
-    # misses (entry not yet published) and its own staged write makes
-    # the later listdir see two dirs transiently.
+    # dir), still bit-identical. The publish is synchronous, so the entry
+    # is on disk when the first call returns.
     import os
 
-    from tests.test_round8_ops import _wait_published
-
-    _wait_published(cache)
     entries = [d for d in os.listdir(cache) if not d.startswith("_")]
     assert len(entries) == 1
-    again = sorted(
-        map(tuple, cached_results(pipe, qs, cache_dir=cache).collect())
-    )
+    # the entry is published from the driver with pyarrow and reloads
+    # with the engine's own column types
+    assert "part-00000.parquet" in os.listdir(os.path.join(cache, entries[0]))
+    again_df = cached_results(pipe, qs, cache_dir=cache)
+    assert not again_df.isLocal()
+    assert [(f.name, f.dataType) for f in again_df.schema] == [
+        (f.name, f.dataType) for f in direct_df.schema
+    ]
+    again = sorted(map(tuple, again_df.collect()))
     assert again == direct
     assert len([d for d in os.listdir(cache) if not d.startswith("_")]) == 1
     # a shallower k is SERVED from the same family entry by rank slice
@@ -197,8 +198,44 @@ def test_cached_results_bit_equal_and_reused(spark, sf_dir, tmp_path):
     cached_results(
         Bm25Search(corpus=docs, k=5, b=0.5), qs, cache_dir=cache
     ).collect()
-    _wait_published(cache, n=2)
     assert len([d for d in os.listdir(cache) if not d.startswith("_")]) == 2
+
+
+def test_cached_results_batch_over_bound_stays_distributed(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A batch above the driver-side bound is not collected: the miss
+    writes the results with Spark, serves the published entry, persists
+    nothing, and a repeat reads the same entry."""
+    import os
+
+    from warp_pipes_spark.io import load_table
+    from warp_pipes_spark.ml import similarity
+    from warp_pipes_spark.search.bm25 import Bm25Search
+    from warp_pipes_spark.search.cached import cached_results
+
+    docs = load_table(spark, sf_dir, "documents")
+    qs = docs.filter(F.col("doc_id") % 25 == 0).select(
+        F.col("doc_id").alias("query_id"),
+        F.substring("text", 1, 40).alias("text"),
+    )
+    pipe = Bm25Search(corpus=docs, k=5)
+    direct = sorted(map(tuple, pipe(qs).collect()))
+    assert len({r[0] for r in direct}) > 3
+    monkeypatch.setattr(similarity, "MAX_QUERY_ROWS", 3)
+    cache = str(tmp_path / "results")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    first_df = cached_results(pipe, qs, cache_dir=cache)
+    assert not first_df.isLocal()
+    assert sorted(map(tuple, first_df.collect())) == direct
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    entries = [d for d in os.listdir(cache) if not d.startswith("_")]
+    assert len(entries) == 1
+    # written by Spark's writer, not the driver-side pyarrow one
+    assert "part-00000.parquet" not in os.listdir(os.path.join(cache, entries[0]))
+    again = cached_results(pipe, qs, cache_dir=cache).collect()
+    assert sorted(map(tuple, again)) == direct
+    assert len([d for d in os.listdir(cache) if not d.startswith("_")]) == 1
 
 
 def test_rbo_closed_form(spark):

@@ -127,6 +127,41 @@ def test_dense_pandas_strategy_matches_join(spark, vectors):
     assert j == p
 
 
+def test_dense_local_batch_matches_salted_plan(spark, vectors):
+    """A local query batch reads its query count from the plan instead of
+    probing it (no job while planning) and must give the probed plan's
+    fan-out and exact rows, for both ``exclude_self`` values and for
+    batches smaller (salted) and larger (plain repartition) than the
+    shuffle width."""
+    from warp_pipes_spark.ml.similarity import local_batch, local_rows
+
+    _, df = vectors
+    sc = spark.sparkContext
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def plan(d):
+        return d._jdf.queryExecution().optimizedPlan().toString()
+
+    for n in (3, width + 12):
+        queries = df.filter(F.col("vec_id") < n)
+        local = local_batch(queries)
+        assert local.isLocal() and not queries.isLocal()
+        assert local_rows(local) == n
+        for exclude_self in (True, False):
+            eng = BruteForceCosineTopK(corpus=df, k=5, exclude_self=exclude_self)
+            want_df = eng(queries)
+            want = sorted(map(tuple, want_df.collect()))
+            group = f"dense-local-{n}-{exclude_self}"
+            sc.setJobGroup(group, group)
+            try:
+                out = eng(local)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert not sc.statusTracker().getJobIdsForGroup(group)
+            assert sorted(map(tuple, out.collect())) == want, (n, exclude_self)
+            assert ("__salt" in plan(out)) == ("__salt" in plan(want_df)) == (n < width)
+
+
 def test_lsh_recall_against_exact(spark, vectors):
     _, df = vectors
     queries = df.filter(F.col("vec_id") < 20)
@@ -660,6 +695,58 @@ def test_index_rrf_merge_strategy(spark):
     # doc 11 (ranked by both engines) must fuse to the top
     assert out.orderBy("rank").first()["idx"] == 11
 
+    def windows(df):
+        import re
+
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return len(re.findall(r"\bWindow \[", plan))
+
+    # the last fusion ranks straight to k: no top-k window after it
+    assert windows(out) == 3
+
+    class RankedFixed(FixedResults):
+        """An engine that ranks its own output (score desc, idx asc)."""
+
+        def __init__(self, rows, k, **kw):
+            super().__init__(rows, **kw)
+            self.k = k
+
+        def _transform(self, df, **kwargs):
+            return topk_results(super()._transform(df, **kwargs), self.k)
+
+    ra = RankedFixed([(1, 10, 0.9), (1, 11, 0.8), (1, 12, 0.7), (2, 12, 0.5),
+                      (2, 10, 0.5), (1, 14, 0.1)], k=3)
+    rb = RankedFixed([(1, 11, 15.0), (1, 13, 9.0), (2, 13, 1.0), (2, 12, 2.0)],
+                     k=2)
+    c = FixedResults([(1, 13, 3.0), (1, 10, 1.0), (2, 10, 4.0), (2, 11, 4.0)])
+    queries2 = spark.createDataFrame([(1,), (2,)], "query_id long")
+
+    def rrf_ref(*sides, k):
+        # the re-ranking composition: every side through topk_results
+        return rrf_fuse(*[topk_results(x, 3) for x in sides], c=60.0, k=k)\
+            .select("query_id", "idx", F.col("rrf").alias("score"))
+
+    for k in (2, 5):
+        out = Index(
+            corpus=queries2, engines=[ra, rb, c], k=k, rrf_depth=3,
+            merge_previous_results=True, merge_strategy="rrf",
+        )(queries2)
+        manual = topk_results(
+            rrf_ref(
+                rrf_ref(ra.transform(queries2), rb.transform(queries2), k=3),
+                c.transform(queries2),
+                k=3,
+            ),
+            k,
+        )
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, manual.collect())
+        ), k
+        assert out.columns == manual.columns
+        # ra's and rb's own windows, c's depth cut, two fusions — the
+        # ranked sides and the fused prefix are not re-ranked
+        assert windows(out) == 5, k
+
 
 def test_pq_local_trainer_matches_spark_trainer(spark, sf_dir):
     """q95's codebook literals are honest: the pure-Python replica retrains
@@ -761,15 +848,18 @@ def test_ann_recall_sweep_monotone(spark, sf_dir):
     assert recalls[-1] > recalls[0], recalls
 
 
-def test_bm25_threshold_prune_is_lossless(spark, sf_dir):
+def test_bm25_threshold_prune_is_lossless(spark, sf_dir, tmp_path):
     """The seed-threshold prune (maxscore=True, the default) must return
     BIT-IDENTICAL results to the exhaustive plan for every k, including
     k=1 and k past the match count — it is a physical optimization, not a
     semantics change. Covers both physical strategies: the doc-major
     branch (dense vocabulary — what this corpus exercises) and the
     term-major fallback (forced via a one-query batch, whose fan-out
-    estimate stays below the index size)."""
+    estimate stays below the index size), and both theta sites: Spark
+    (unmaterialized index) and the driver (materialized index), over
+    distributed and local batches."""
     from warp_pipes_spark.io import load_table
+    from warp_pipes_spark.ml.similarity import local_batch
     from warp_pipes_spark.search.bm25 import Bm25Search
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -779,24 +869,32 @@ def test_bm25_threshold_prune_is_lossless(spark, sf_dir):
     )
     one_query = queries.limit(1)
     for k in (1, 5, 23):
-        for batch in (queries, one_query):
-            fast = Bm25Search(
-                corpus=docs, k=k, maxscore=True, materialize_index=False
-            )(batch)
+        for batch in (queries, one_query, local_batch(queries)):
             slow = Bm25Search(
                 corpus=docs, k=k, maxscore=False, materialize_index=False
             )(batch)
-            assert sorted(map(tuple, fast.collect())) == sorted(
-                map(tuple, slow.collect())
-            ), f"prune changed results at k={k}"
+            want = sorted(map(tuple, slow.collect()))
+            for materialize in (False, True):
+                fast = Bm25Search(
+                    corpus=docs, k=k, maxscore=True,
+                    materialize_index=materialize,
+                    index_cache_dir=str(tmp_path / "bm25"),
+                )(batch)
+                assert sorted(map(tuple, fast.collect())) == want, (
+                    f"prune changed results at k={k}, "
+                    f"materialize_index={materialize}"
+                )
 
 
-def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir):
+def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir, tmp_path):
     """Round-6 extension: the prune must stay BIT-IDENTICAL on the
     aux-boosted (fixed and log-length-scaled weights), term-filtered,
     champion-capped and BM25F paths — each previously excluded from
-    `_maxscore_eligible`. k sweeps below and past the match count."""
+    `_maxscore_eligible`. k sweeps below and past the match count. The
+    materialized engines over a local batch feed the once-collected term
+    rows (both legs, filter values) to the Spark-side theta."""
     from warp_pipes_spark.io import load_table
+    from warp_pipes_spark.ml.similarity import local_batch
     from warp_pipes_spark.search.bm25 import Bm25FSearch, Bm25Search
     from warp_pipes_spark.text.analysis import tokens_expr
 
@@ -834,9 +932,16 @@ def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir):
                 corpus=docs, k=k, maxscore=False,
                 materialize_index=False, **kw,
             )
-            assert sorted(map(tuple, fast(queries).collect())) == sorted(
-                map(tuple, slow(queries).collect())
-            ), f"prune changed results for {label} at k={k}"
+            want = sorted(map(tuple, slow(queries).collect()))
+            assert sorted(map(tuple, fast(queries).collect())) == want, (
+                f"prune changed results for {label} at k={k}"
+            )
+            materialized = Bm25Search(
+                corpus=docs, k=k, index_cache_dir=str(tmp_path / "bm25"), **kw
+            )
+            assert sorted(
+                map(tuple, materialized(local_batch(queries)).collect())
+            ) == want, f"local term rows changed results for {label} at k={k}"
 
     # BM25F (two weighted fields, per-field length norm)
     corpus_f = docs.select(
@@ -859,6 +964,108 @@ def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir):
         assert sorted(map(tuple, fast(queries).collect())) == sorted(
             map(tuple, slow(queries).collect())
         ), f"prune changed BM25F results at k={k}"
+
+
+def test_bm25_driver_theta_matches_spark_theta_and_oracle(spark, tmp_path):
+    """The single-leg MaxScore threshold computed on the driver (from the
+    pyarrow-read seed lists and the once-collected term rows) must equal
+    the Spark-side seed join + window exactly, and the pruned results
+    must equal maxscore=False and the DuckDB oracle, on local and
+    distributed batches. Inputs cover fewer than k seed candidates,
+    unknown terms, empty and NULL text, repeated terms, ties at the k-th
+    partial (identical documents), k past the match count, an appended
+    engine, and QL's reuse of `_fan_est`."""
+    import duckdb
+    from pyspark.sql import Window
+    from pyspark.sql.types import LongType
+
+    from warp_pipes_spark.ml.similarity import local_batch
+    from warp_pipes_spark.pipes.cache import _load_memo
+    from warp_pipes_spark.search.bm25 import Bm25Search, bm25_oracle_sql
+    from warp_pipes_spark.search.ql import DirichletQLSearch
+
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    rows = [(i, " ".join(words[j % 8] for j in range(i % 5, i % 5 + 2 + i % 4)))
+            for i in range(40)]
+    # identical documents tie at every partial; one rare term
+    rows += [(40 + i, "alpha beta beta gamma") for i in range(6)]
+    rows += [(50, "rareword alpha"), (51, "")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    qrows = [
+        (1, "alpha beta"),
+        (2, "rareword"),  # one seed candidate: theta NULL for k > 1
+        (3, "zzz_unknown beta"),
+        (4, ""),
+        (5, None),
+        (6, "beta beta gamma gamma"),
+        (7, "alpha beta gamma delta eps zeta eta theta"),
+        (8, "zzz_unknown"),
+    ]
+    queries = spark.createDataFrame(qrows, "query_id long, text string")
+    local = local_batch(queries)
+    assert local.isLocal() and not queries.isLocal()
+
+    con = duckdb.connect()
+    con.register("corpus_t", docs.toPandas())
+    con.register("q_t", queries.toPandas())
+
+    def key(df):
+        return sorted(map(tuple, df.collect()))
+
+    cache = str(tmp_path / "bm25")
+    for k in (1, 3, 7, 60):
+        eng = Bm25Search(corpus=docs, k=k, index_cache_dir=cache)
+        exact = key(Bm25Search(corpus=docs, k=k, maxscore=False,
+                               index_cache_dir=cache)(queries))
+        oracle = sorted(
+            (q, r, i, s) for q, r, i, s in con.execute(
+                bm25_oracle_sql("corpus_t", "SELECT query_id, text AS qtext FROM q_t", k=k)
+            ).fetchall()
+        )
+        assert exact == oracle, k
+        for batch in (local, queries):
+            assert key(eng(batch)) == exact, (k, batch.isLocal())
+        # theta itself: driver dict sums == Spark seed join + window
+        assert eng._seed_lists() is not None
+        legs, frame = eng._local_query_legs(local)
+        assert key(frame) == key(eng._query_legs(queries))
+        driver = key(eng._driver_theta(legs, LongType(), spark))
+        seed = eng._seed_table(eng._index())
+        partial = (
+            eng._query_legs(queries).join(seed, "term")
+            .groupBy("query_id", "doc_id").agg(F.sum("ts").alias("ps"))
+        )
+        wk = Window.partitionBy("query_id").orderBy(F.desc("ps"), F.asc("doc_id"))
+        spark_theta = key(
+            partial.withColumn("rk", F.row_number().over(wk))
+            .filter(F.col("rk") == k).select("query_id", "ps")
+        )
+        assert driver == spark_theta, k
+        assert driver or k == 60
+        # the Spark-side theta (vocabulary over the driver cap) agrees
+        eng._TERMDF_MAP_MAX_ROWS = 0
+        _load_memo.clear()
+        assert eng._termdf_map() is None and eng._seed_lists() is None
+        assert key(eng(local)) == exact
+        _load_memo.clear()
+
+    # appended engine: re-baked index, fresh seed artifact, same answer
+    extra = spark.createDataFrame(
+        [(100, "alpha rareword rareword"), (101, "gamma gamma delta")],
+        "doc_id long, text string",
+    )
+    appended = Bm25Search(corpus=docs, k=3, index_cache_dir=cache).append(extra)
+    scratch = Bm25Search(corpus=docs.unionByName(extra), k=3, maxscore=False,
+                         index_cache_dir=cache)
+    assert key(appended(local)) == key(scratch(queries))
+    assert appended._seed_lists() is not None
+
+    # QL reuses Bm25Search._fan_est over its own term rows
+    for batch in (local, queries):
+        ql = DirichletQLSearch(corpus=docs, k=3, index_cache_dir=cache)
+        ql_exact = DirichletQLSearch(corpus=docs, k=3, prune=False,
+                                     index_cache_dir=cache)
+        assert key(ql(batch)) == key(ql_exact(queries))
 
 
 def test_bm25_prune_ineligible_configs_fall_back(spark, sf_dir):

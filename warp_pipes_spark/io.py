@@ -122,6 +122,45 @@ def register_views(spark: SparkSession, sf_dir: str, names: Iterable[str] = TEST
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
+def arrow_exact(dtype: T.DataType) -> bool:
+    """True when a column of ``dtype``, collected to Python rows, goes back
+    into Arrow bit-exactly: numbers, strings, bytes, booleans, decimals and
+    dates, and arrays/structs of them. Timestamps are excluded (collected
+    as naive local-time datetimes), as are maps and user-defined types."""
+    if isinstance(dtype, T.ArrayType):
+        return arrow_exact(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return all(arrow_exact(f.dataType) for f in dtype.fields)
+    return isinstance(
+        dtype,
+        (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+         T.FloatType, T.DoubleType, T.StringType, T.BinaryType,
+         T.DecimalType, T.DateType),
+    )
+
+
+def rows_to_arrow(rows: list, schema: T.StructType):
+    """Collected rows (tuples in ``schema`` order) -> a pyarrow Table typed
+    by ``schema``'s Arrow mapping. Callers check :func:`arrow_exact` first."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """Driver-held rows -> an Arrow-backed ``LocalRelation``: the plan
+    carries the rows itself, so collecting it runs no Spark job and a
+    broadcast ships them without reading anything (a ``createDataFrame``
+    over a Python list parallelizes an RDD instead)."""
+    return spark.createDataFrame(rows_to_arrow(rows, schema), schema=schema)
+
+
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by=None) -> None:
     w = df.write.mode(mode)
     if partition_by:

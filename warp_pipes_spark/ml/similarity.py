@@ -5,8 +5,15 @@ North-star extension operators:
 - **BruteForceCosineTopK** — exact top-k neighbors; the correctness
   baseline. Two physical strategies:
   (a) ``strategy='join'``: query⨝corpus cross-join + window top-k, pure
-      DataFrame — Catalyst broadcasts the small side; right shape for
-      moderate corpus × query products and the DuckDB oracle.
+      DataFrame; right shape for moderate corpus × query products and the
+      DuckDB oracle. The corpus is broadcast and the query side spread
+      over the shuffle width (``salted_query_fanout``); the query count
+      that sizes the spread is probed with a job for a distributed query
+      side (kNN self-joins over a table) and read from the plan for a
+      LOCAL batch (``local_batch`` — ``Index`` and ``cached_results``
+      make every bounded batch one). (Streaming the corpus past a broadcast local batch instead
+      scores in the corpus's own partitions — one task for a corpus in one
+      file: 2-3x slower in wall time at 256-2,048 queries, 4 cores.)
   (b) ``strategy='pandas'``: Arrow-batched BLAS — the corpus STREAMS
       through executors (never collected/broadcast), the bounded query
       batch is the broadcast side; per-batch top-k partials merge through
@@ -72,6 +79,36 @@ def _norm(a):
     )
 
 
+# default bound on a query batch the driver holds (collects, broadcasts
+# or turns into a LocalRelation); engines take it as ``max_query_rows``
+MAX_QUERY_ROWS = 100_000
+
+
+def local_batch(df: DataFrame) -> DataFrame:
+    """A bounded query batch as an Arrow-backed ``LocalRelation``: ONE
+    ``limit(MAX_QUERY_ROWS + 1).toArrow()`` job brings it to the driver,
+    and every engine that then plans over it reads per-batch inputs (term
+    rows, the query count) from the plan itself — no probe jobs, no
+    re-read of the source. Returned unchanged when it is already local,
+    has a column Arrow cannot carry, or holds more than
+    ``MAX_QUERY_ROWS`` rows: it then stays a distributed input, engines
+    keep their distributed plans, and the fetched rows are dropped (the
+    fetch costs at most one bounded scan of the batch on top of the
+    query). Same rows and Spark types either way."""
+    if df.isLocal():
+        return df
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    try:
+        to_arrow_schema(df.schema)
+    except TypeError:  # a column type with no Arrow mapping
+        return df
+    table = df.limit(MAX_QUERY_ROWS + 1).toArrow()
+    if table.num_rows > MAX_QUERY_ROWS:
+        return df
+    return df.sparkSession.createDataFrame(table, schema=df.schema)
+
+
 def collect_bounded(df: DataFrame, max_rows: int, what: str) -> list:
     """Enforce the bounded-query-batch contract BEFORE collecting: the
     pandas-BLAS and PQ query paths broadcast the query matrix, which is
@@ -96,8 +133,14 @@ def cosine_expr(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def local_rows(df: DataFrame) -> int:
+    """Row count of a driver-local frame (``df.isLocal()``), read from its
+    plan: no job."""
+    return df._jdf.queryExecution().analyzed().maxRows().get()
+
+
 def salted_query_fanout(
-    q: DataFrame, n_shuffle: int, key: str = "query_id"
+    q: DataFrame, n_shuffle: int, key: str = "query_id", n_q: Optional[int] = None
 ) -> tuple:
     """Decide-before-shuffle parallelism pin for broadcast-corpus
     scoring joins. Returns ``(q', salt_width)``.
@@ -119,8 +162,10 @@ def salted_query_fanout(
 
     Either way each (query, salt) pair block stays within one task, so
     the rank window's partial top-k (WindowGroupLimit) still prunes
-    map-side before the final by-query shuffle."""
-    n_q = q.limit(n_shuffle).count()
+    map-side before the final by-query shuffle. A caller that already
+    knows the query count passes it as ``n_q`` and skips the probe."""
+    if n_q is None:
+        n_q = q.limit(n_shuffle).count()
     if n_q >= n_shuffle:
         return q.repartition(n_shuffle, key), 0
     s = max(1, -(-n_shuffle // max(n_q, 1)))
@@ -144,7 +189,7 @@ class BruteForceCosineTopK(Pipe):
         corpus_vec: str = "embedding",
         exclude_self: bool = True,
         strategy: str = "join",
-        max_query_rows: int = 100_000,
+        max_query_rows: int = MAX_QUERY_ROWS,
         dim: Optional[int] = None,
         **kwargs,
     ):
@@ -170,8 +215,6 @@ class BruteForceCosineTopK(Pipe):
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         if self.strategy == "pandas":
             return self._transform_pandas(df)
-        from warp_pipes_spark.text.dedup import widen_partitions
-
         # norms precomputed per ROW, not per pair — numerically identical
         # (same fold order / sqrt / multiply / divide) but 1/3 of the
         # join-side flops; the query side is repartitioned BY KEY because
@@ -182,7 +225,8 @@ class BruteForceCosineTopK(Pipe):
         # (measured 34 s vs 9 s at the 30x soak). Explicit numPartitions
         # so AQE can't coalesce it on input bytes; each query's pair
         # block stays in one task so WindowGroupLimit still prunes
-        # map-side.
+        # map-side. A LOCAL batch (``local_batch``) carries its row
+        # count in its plan: no probe job.
         n_shuffle = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
@@ -192,6 +236,7 @@ class BruteForceCosineTopK(Pipe):
                 F.col(self.query_vec).cast("array<double>").alias("qv"),
             ),
             n_shuffle,
+            n_q=local_rows(df) if df.isLocal() else None,
         )
         q = q.withColumn("qn", _norm(F.col("qv")))
         c = self.corpus.select(

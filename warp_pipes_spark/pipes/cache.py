@@ -50,10 +50,11 @@ _load_memo: dict = {}
 # (cache_dir, fingerprint) -> [DataFrame, Thread] for write-behind
 # publishes still in flight. Between store_async() returning and the
 # background rename landing, the entry is not yet on disk — a
-# same-session reader (the next eval panel in a bench run) would MISS,
-# silently recompute the whole retrieval it was supposed to reuse, and
-# race a duplicate staging write. Serving the live (persisted) plan from
-# this registry is exact: it is the very DataFrame being published.
+# same-session reader (the next query over a fresh LSH table or IVF
+# list) would MISS, silently rebuild the artifact it was supposed to
+# reuse, and race a duplicate staging write. Serving the live
+# (persisted) plan from this registry is exact: it is the very
+# DataFrame being published.
 _inflight: dict = {}
 
 
@@ -103,6 +104,28 @@ def clear_all_artifact_caches() -> None:
             shutil.rmtree(d, ignore_errors=True)
 
 
+def _write_local(df: DataFrame, staging: str) -> bool:
+    """Write a driver-local frame (an Arrow-backed ``LocalRelation``, e.g.
+    a collected top-k results table) into ``staging`` with pyarrow: its
+    rows are already on the driver, so a Spark write would only ship them
+    to a task and back (one job). Leaves what a Spark write leaves — one
+    Parquet part file plus ``_SUCCESS`` — and reloads with the same Spark
+    types. Returns False, for the Spark writer to take over, when ``df``
+    is distributed or has a column type Python rows cannot carry exactly
+    (``io.arrow_exact``)."""
+    from warp_pipes_spark.io import arrow_exact, rows_to_arrow
+
+    if not df.isLocal() or not arrow_exact(df.schema):
+        return False
+    import pyarrow.parquet as pq
+
+    table = rows_to_arrow(df.collect(), df.schema)
+    os.makedirs(staging)
+    pq.write_table(table, os.path.join(staging, "part-00000.parquet"))
+    open(os.path.join(staging, "_SUCCESS"), "w").close()
+    return True
+
+
 class CacheManager:
     """Content-addressed Parquet cache: ``cache_dir/<fingerprint>/``.
 
@@ -124,11 +147,6 @@ class CacheManager:
         if (self.cache_dir, fingerprint) in _inflight:
             return True
         return os.path.exists(os.path.join(self.path_for(fingerprint), "_SUCCESS"))
-
-    def inflight_names(self) -> list:
-        """Fingerprints with a write-behind publish still in flight for
-        THIS cache dir — not yet listable on disk but serveable live."""
-        return [fp for (cdir, fp) in list(_inflight) if cdir == self.cache_dir]
 
     def load(self, spark: SparkSession, fingerprint: str) -> DataFrame:
         entry = _inflight.get((self.cache_dir, fingerprint))
@@ -183,12 +201,19 @@ class CacheManager:
             return {}
 
     def store(self, df: DataFrame, fingerprint: str, meta: Optional[dict] = None) -> DataFrame:
+        """Publish ``df`` under ``fingerprint`` and return the published
+        content: the loaded artifact, or — for a driver-local frame,
+        written with pyarrow (`_write_local`) — ``df`` itself, which
+        already holds the stored rows (reading it back would cost a
+        schema-inference job)."""
         import shutil
         import uuid
 
         path = self.path_for(fingerprint)
         staging = f"{path}.staging-{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(staging)
+        local = _write_local(df, staging)
+        if not local:
+            df.write.mode("overwrite").parquet(staging)
         with open(os.path.join(staging, "_wps_meta.json"), "w") as f:
             json.dump({"fingerprint": fingerprint, "written_at": time.time(), **(meta or {})}, f)
         try:
@@ -197,7 +222,7 @@ class CacheManager:
             # a concurrent writer published first: same fingerprint = same
             # content — use theirs, drop ours
             shutil.rmtree(staging, ignore_errors=True)
-        return self.load(df.sparkSession, fingerprint)
+        return df if local else self.load(df.sparkSession, fingerprint)
 
     def store_async(
         self,
@@ -224,15 +249,8 @@ class CacheManager:
         the foreground query share one materialization of the plan —
         without this an expensive plan (e.g. a PQ encode UDF over the
         whole corpus) executes at least twice, competing for the same
-        executors. The persist is released once the publish completes —
-        UNLESS ``release=False``: a caller whose returned plan is
-        consumed repeatedly AFTER the publish (the results cache: a PRF
-        feedback pass references the first-pass ranking several times)
-        must keep the persist, or the publish thread yanks it mid-query
-        and every later reference recomputes the full plan. Such
-        persists are small by contract (top-k results tables) and are
-        reclaimed by ``spark.catalog.clearCache()`` or the
-        ContextCleaner once the plan is garbage collected."""
+        executors. The persist is released once the publish completes.
+        ``release`` is accepted for existing callers and has no effect."""
 
         we_persisted = False
         try:
@@ -258,7 +276,7 @@ class CacheManager:
                 )
             finally:
                 _inflight.pop(inflight_key, None)
-                if we_persisted and release:
+                if we_persisted:
                     try:
                         df.unpersist(blocking=False)
                     except Exception:

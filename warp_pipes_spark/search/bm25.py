@@ -461,10 +461,9 @@ class Bm25Search(Pipe):
         self,
         queries: DataFrame,
         query_text_col: str,
-        weight,
+        weight_col,
         postings: DataFrame,
     ) -> DataFrame:
-        weight_col = F.lit(weight) if isinstance(weight, (int, float)) else weight
         q_terms = queries.select(
             F.col(self.query_id).alias("query_id"),
             *( [F.col(self.filter_key).alias("__qfilter")] if self.filter_key else [] ),
@@ -551,6 +550,9 @@ class Bm25Search(Pipe):
         identical to `_scored` with weight 1.0."""
         return (score_col.cast("decimal(18,6)") * F.lit(1000000)).cast("long")
 
+    def _seed_fingerprint(self) -> str:
+        return self._index_fingerprint() + f"_seedv3_{max(self.k, 16)}"
+
     def _seed_table(self, postings: DataFrame) -> DataFrame:
         """Champion seed lists for the threshold bound: the top
         ``C = max(k, 16)`` postings per term by baked score (doc_id
@@ -558,11 +560,14 @@ class Bm25Search(Pipe):
         beside the index, so query batches pay zero build cost after the
         first. Term-sized x C rows — tiny next to the index.
 
-        Stores the RAW ``score_d`` (not a pre-rounded contribution): the
-        aux leg rounds ``score_d * w`` with a per-QUERY weight, so the
-        decimal cast must happen at query time, after the weight multiply
-        — identical to `_scored`'s expression (weight 1.0 multiplies
-        exactly, so the plain path is unchanged)."""
+        Carries the RAW ``score_d`` AND its weight-1 contribution ``ts``
+        (``_ts_long(score_d)``, computed here by Spark). The aux leg
+        rounds ``score_d * w`` with a per-QUERY weight, so its decimal
+        cast must happen at query time, after the weight multiply —
+        identical to `_scored`'s expression. The single-leg driver-side
+        theta (`_driver_theta`) sums ``ts`` as exact int64s and never
+        re-derives a decimal rounding in Python (weight 1.0 multiplies
+        exactly, so both columns give the same contribution)."""
         from warp_pipes_spark.pipes.cache import CacheManager
 
         C = max(self.k, 16)
@@ -573,11 +578,14 @@ class Bm25Search(Pipe):
         seed = (
             scored.withColumn("__cr", F.row_number().over(wc))
             .filter(F.col("__cr") <= C)
-            .drop("__cr")
+            .select(
+                "term", "doc_id", "score_d",
+                self._ts_long(F.col("score_d")).alias("ts"),
+            )
         )
         if self.materialize_index:
             manager = CacheManager(self.index_cache_dir)
-            fp_seed = self._index_fingerprint() + f"_seedv2_{C}"
+            fp_seed = self._seed_fingerprint()
             if not manager.exists(fp_seed):
                 manager.store(seed, fp_seed)
             seed = manager.load(self.corpus.sparkSession, fp_seed)
@@ -609,19 +617,19 @@ class Bm25Search(Pipe):
     # join probe. Module-level so tests can monkeypatch the threshold.
     _TERMDF_MAP_MAX_ROWS = 262_144
 
-    def _termdf_map(self) -> "dict | None":
-        """term -> df as a driver dict, read straight from the termdf
-        artifact's Parquet files with pyarrow — ZERO Spark jobs — and
+    def _driver_artifact(self, fp: str, columns: list, build):
+        """``build(table)`` over a published index artifact, read straight
+        from its Parquet files with pyarrow — ZERO Spark jobs — and
         memoized per published artifact (the ``CacheManager.load`` memo
         convention: path + _SUCCESS mtime, so a republish invalidates).
-        None when the index is unmaterialized, the artifact is missing,
-        or the vocabulary exceeds the driver-memory cap."""
+        None when the index is unmaterialized, the artifact is missing or
+        unreadable, it holds more than ``_TERMDF_MAP_MAX_ROWS`` rows (the
+        driver-memory cap), or ``build`` declines it."""
         if not self.materialize_index:
             return None
         from warp_pipes_spark.pipes.cache import CacheManager, _load_memo
 
         manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint() + "_termdf"
         if not manager.exists(fp):
             return None
         path = manager.path_for(fp)
@@ -629,29 +637,59 @@ class Bm25Search(Pipe):
             mtime = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
         except OSError:
             return None
-        key = ("termdf_map", path, mtime)
+        key = (build.__name__, path, mtime)
         if key in _load_memo:
             return _load_memo[key]
         result = None
         try:
             import glob as _glob
 
+            import pyarrow as pa
             import pyarrow.parquet as pq
 
             files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
             n_rows = sum(pq.read_metadata(f).num_rows for f in files)
             if n_rows <= self._TERMDF_MAP_MAX_ROWS:
-                result = {}
-                for f in files:
-                    t = pq.read_table(f, columns=["term", "df"])
-                    result.update(
-                        zip(t.column("term").to_pylist(),
-                            t.column("df").to_pylist())
+                result = build(
+                    pa.concat_tables(
+                        [pq.read_table(f, columns=columns) for f in files]
                     )
+                )
         except Exception:
             result = None
         _load_memo[key] = result
         return result
+
+    def _termdf_map(self) -> "dict | None":
+        """term -> df as a driver dict (see `_driver_artifact`)."""
+
+        def termdf_map(t):
+            return dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
+
+        return self._driver_artifact(
+            self._index_fingerprint() + "_termdf", ["term", "df"], termdf_map
+        )
+
+    def _seed_lists(self) -> "dict | None":
+        """term -> [(doc_id, ts)] seed lists as a driver dict (see
+        `_driver_artifact`); None also when a contribution is NULL, whose
+        SQL sum semantics the driver-side theta does not mirror."""
+
+        def seed_lists(t):
+            if t.column("ts").null_count:
+                return None
+            out: dict = {}
+            for term, doc, ts in zip(
+                t.column("term").to_pylist(),
+                t.column("doc_id").to_pylist(),
+                t.column("ts").to_pylist(),
+            ):
+                out.setdefault(term, []).append((doc, ts))
+            return out
+
+        return self._driver_artifact(
+            self._seed_fingerprint(), ["term", "doc_id", "ts"], seed_lists
+        )
 
     def _fan_est(self, qterms: DataFrame, stats: DataFrame) -> int:
         """Exact scoring fan-out Σ df(t) over the batch's query-term
@@ -724,17 +762,34 @@ class Bm25Search(Pipe):
         keep every scored doc — exactly the queries with almost no
         matches, so their window input is tiny anyway.
 
-        VARIANTS (round-6 extension; same theta argument throughout):
-        aux-boosted queries contribute a second leg of (term, weight)
-        rows — both the seed partials and the exact sums round
-        ``score_d * w`` per contribution exactly like `_scored`, and the
-        bound holds because both legs' weights are >= 0. Term-filtered
-        queries restrict BOTH the seed partials and the candidate set to
-        docs whose filter value matches the query's, so theta bounds the
-        k-th best score within the filtered universe. Single-leg
-        configs keep the round-5 posting-side precomputed contribution
-        (one decimal cast per INDEX row); only aux configs round
-        ``score_d * w`` per fan-out row, because the weight is per-query.
+        WHERE THETA IS COMPUTED. The per-batch planning inputs are small
+        (a few term rows per query, k x |terms| seed entries), so the
+        batch's ``(query_id, [__qfilter,] __w, term)`` rows are collected
+        ONCE (`_local_query_legs`) and reused three ways: the fan-out
+        estimate sums the driver termdf dict over them; single-leg,
+        unfiltered engines compute theta per query on the driver from the
+        pyarrow-read seed lists (`_driver_theta`: exact int64 sums of the
+        Spark-rounded ``ts``, k-th best partial, NULL below k candidates);
+        and both go back into the plan as Arrow-backed LocalRelations,
+        broadcast straight from the driver's rows. The seed scan and join,
+        its aggregate exchange and the theta window exchange are gone; the
+        postings side stays distributed. On a local batch (``Index`` hands
+        engines one) the term collect runs no job.
+        Spark computes theta (the seed join + window below) for aux-leg
+        and ``filter_key`` configs, for vocabularies above
+        ``_TERMDF_MAP_MAX_ROWS`` and for unmaterialized indexes.
+
+        VARIANTS (same theta argument throughout): aux-boosted queries
+        contribute a second leg of (term, weight) rows — both the seed
+        partials and the exact sums round ``score_d * w`` per
+        contribution exactly like `_scored`, and the bound holds because
+        both legs' weights are >= 0. Term-filtered queries restrict BOTH
+        the seed partials and the candidate set to docs whose filter value
+        matches the query's, so theta bounds the k-th best score within
+        the filtered universe. Single-leg configs keep the posting-side
+        precomputed contribution (one decimal cast per INDEX row); only
+        aux configs round ``score_d * w`` per fan-out row, because the
+        weight is per-query.
 
         PHYSICAL STRATEGY — the contribution fan-out (one row per query
         term x matching posting) must be aggregated per (query, doc); the
@@ -755,7 +810,27 @@ class Bm25Search(Pipe):
           fan-out over a 1.16M-row index): the fan-out shuffle was 20.7 s
           of a 44 s pass; this plan removes it entirely."""
         seed = self._seed_table(postings)
-        qterms = self._query_legs(df)
+        # strategy inputs: both sides of the doc-major inequality are
+        # exact row counts from the vocabulary-sized df table; the term
+        # rows carry one row per (query, leg, term), so the df sum counts
+        # the true fan-out across legs
+        stats = self._term_stats(postings)
+        n_postings = self._n_postings(stats)
+        single_leg = self.aux_text_col is None
+        dfmap = self._termdf_map()
+        legs = self._local_query_legs(df) if dfmap is not None else None
+        theta = None
+        if legs is None:
+            qterms = self._query_legs(df)
+            fan_est = self._fan_est(qterms, stats)
+        else:
+            rows, qterms = legs
+            fan_est = sum(dfmap.get(r[-1], 0) for r in rows)
+            if single_leg and not self.filter_key:
+                theta = self._driver_theta(
+                    rows, qterms.schema["query_id"].dataType, df.sparkSession
+                )
+        doc_major = fan_est > n_postings
         if self.broadcast_queries:
             qterms = F.broadcast(qterms)
         # per-contribution units: round AFTER the leg-weight multiply,
@@ -764,7 +839,6 @@ class Bm25Search(Pipe):
         # one decimal round per index row instead of per fan-out row
         # (multiplying by 1.0 is an IEEE identity, so both cast points
         # round the same value)
-        single_leg = self.aux_text_col is None
         ts = self._ts_long(F.col("score_d") * F.col("__w"))
         doc_filters = None
         join_keys = ["term"]
@@ -780,31 +854,24 @@ class Bm25Search(Pipe):
             seed = seed.join(doc_filters, "doc_id")
             join_keys = ["term", "__qfilter"]
 
-        # theta: k-th best seed partial per query (deterministic); with a
-        # term filter, only filter-satisfying docs may seed the bound
-        partial = (
-            qterms.join(seed, join_keys)
-            .select("query_id", "doc_id", ts.alias("ts"))
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("ts").alias("ps"))
-        )
-        wk = Window.partitionBy("query_id").orderBy(
-            F.desc("ps"), F.asc("doc_id")
-        )
-        theta = (
-            partial.withColumn("__rk", F.row_number().over(wk))
-            .filter(F.col("__rk") == self.k)
-            .select("query_id", F.col("ps").alias("__theta"))
-        )
-
-        # strategy choice: both sides of the inequality are exact row
-        # counts from the vocabulary-sized df table (two scalar probes);
-        # qterms carries one row per (query, leg, term), so the join-sum
-        # counts the true fan-out across legs
-        stats = self._term_stats(postings)
-        n_postings = self._n_postings(stats)
-        fan_est = self._fan_est(qterms, stats)
-        doc_major = fan_est > n_postings
+        if theta is None:
+            # Spark-side theta: k-th best seed partial per query
+            # (deterministic); with a term filter, only filter-satisfying
+            # docs may seed the bound
+            partial = (
+                qterms.join(seed, join_keys)
+                .select("query_id", "doc_id", ts.alias("ts"))
+                .groupBy("query_id", "doc_id")
+                .agg(F.sum("ts").alias("ps"))
+            )
+            wk = Window.partitionBy("query_id").orderBy(
+                F.desc("ps"), F.asc("doc_id")
+            )
+            theta = (
+                partial.withColumn("__rk", F.row_number().over(wk))
+                .filter(F.col("__rk") == self.k)
+                .select("query_id", F.col("ps").alias("__theta"))
+            )
 
         if single_leg:
             scored = postings.select(
@@ -847,22 +914,129 @@ class Bm25Search(Pipe):
         )
         return self._finalize(scores)
 
+    def _local_query_legs(self, df: DataFrame) -> "tuple | None":
+        """`_query_legs` collected ONCE: ``(rows, frame)`` with the
+        batch's ``(query_id, [__qfilter,] __w, term)`` tuples and the same
+        rows as an Arrow-backed LocalRelation for the plan. The collect
+        takes one row per query (each leg's weight and distinct-token
+        array) and explodes on the driver, so on a local batch Spark
+        folds the projection into the relation and runs no job; a
+        distributed batch pays one narrow collect. Same rows as
+        `_query_legs`: the explode of the same arrays, one row per
+        (query, leg, distinct term). None when a key column's values do
+        not round-trip through Python rows exactly (``io.arrow_exact``);
+        the caller keeps the Spark-side legs."""
+        from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+        from warp_pipes_spark.io import arrow_exact, local_frame
+
+        keys = [F.col(self.query_id).alias("query_id")]
+        if self.filter_key:
+            keys.append(F.col(self.filter_key).alias("__qfilter"))
+        legs = self._legs()
+        cols = list(keys)
+        for i, (text_col, wcol) in enumerate(legs):
+            cols += [
+                wcol.alias(f"__w{i}"),
+                F.array_distinct(tokens_expr(F.col(text_col))).alias(f"__t{i}"),
+            ]
+        proj = df.select(*cols)
+        key_fields = proj.schema.fields[: len(keys)]
+        if not all(arrow_exact(f.dataType) for f in key_fields):
+            return None
+        nk = len(keys)
+        rows = []
+        for r in proj.collect():
+            for i in range(len(legs)):
+                w, terms = r[nk + 2 * i], r[nk + 2 * i + 1]
+                for term in terms or ():
+                    rows.append((*r[:nk], w, term))
+        schema = StructType(
+            [StructField(f.name, f.dataType, True) for f in key_fields]
+            + [StructField("__w", DoubleType(), True),
+               StructField("term", StringType(), True)]
+        )
+        return rows, local_frame(df.sparkSession, rows, schema)
+
+    def _driver_theta(self, rows: list, key_type, spark) -> "DataFrame | None":
+        """Single-leg theta on the driver, as a LocalRelation
+        ``(query_id, __theta)``: per query, the exact int64 partial of
+        every seed doc (the sum of its seed ``ts`` over the query's term
+        rows — the Spark path's seed join + aggregate), then the k-th
+        best partial. The value at rank k under (ps desc, doc_id asc) is
+        the k-th largest partial whatever the doc tie-break, and queries
+        with fewer than k seed candidates get no row (NULL theta after
+        the left join). NULL query ids never join, so they are skipped.
+        None (Spark computes theta) when the seed lists are not held on
+        the driver, or for floating query ids, whose grouping (NaN,
+        -0.0) Python dicts do not mirror."""
+        import heapq
+
+        from pyspark.sql.types import (
+            DoubleType,
+            FloatType,
+            LongType,
+            StructField,
+            StructType,
+        )
+
+        from warp_pipes_spark.io import local_frame
+
+        if isinstance(key_type, (FloatType, DoubleType)):
+            return None
+        seeds = self._seed_lists()
+        if seeds is None:
+            return None
+        partial: dict = {}
+        for qid, _w, term in rows:
+            hits = seeds.get(term)
+            if qid is None or hits is None:
+                continue
+            acc = partial.setdefault(qid, {})
+            for doc, ts in hits:
+                acc[doc] = acc.get(doc, 0) + ts
+        k = self.k
+        out = [
+            (qid, heapq.nlargest(k, acc.values())[-1])
+            for qid, acc in partial.items()
+            if k >= 1 and len(acc) >= k
+        ]
+        schema = StructType(
+            [StructField("query_id", key_type, True),
+             StructField("__theta", LongType(), True)]
+        )
+        return local_frame(spark, out, schema)
+
+    def _legs(self) -> list:
+        """(text column, weight Column) per scoring leg: the main query
+        text at weight 1.0, plus the optional aux text at its fixed or
+        per-query log-length-scaled weight."""
+        legs = [(self.query_text, F.lit(1.0))]
+        if self.aux_text_col:
+            legs.append(
+                (
+                    self.aux_text_col,
+                    self._aux_weight_expr()
+                    if self.scale_aux_weight
+                    else F.lit(float(self.aux_weight)),
+                )
+            )
+        return legs
+
     def _query_legs(self, df: DataFrame) -> DataFrame:
-        """(query_id, [__qfilter,] __w, term) rows for every scoring leg —
-        the main query text at weight 1 plus the optional aux leg at its
-        (possibly per-query log-length-scaled) weight. Mirrors `_scored`'s
-        per-leg explosion so the pruned path rounds identical
-        contributions; a term appearing in both legs yields two rows whose
-        contributions ADD, matching the exhaustive union-of-legs plan."""
+        """(query_id, [__qfilter,] __w, term) rows for every scoring leg.
+        Mirrors `_scored`'s per-leg explosion so the pruned path rounds
+        identical contributions; a term appearing in both legs yields two
+        rows whose contributions ADD, matching the exhaustive
+        union-of-legs plan."""
         fsel = (
             [F.col(self.filter_key).alias("__qfilter")]
             if self.filter_key
             else []
         )
-
-        def leg(text_col, w):
-            wcol = F.lit(float(w)) if isinstance(w, (int, float)) else w
-            return df.select(
+        out = None
+        for text_col, wcol in self._legs():
+            leg = df.select(
                 F.col(self.query_id).alias("query_id"),
                 *fsel,
                 wcol.alias("__w"),
@@ -870,15 +1044,7 @@ class Bm25Search(Pipe):
                     F.array_distinct(tokens_expr(F.col(text_col)))
                 ).alias("term"),
             )
-
-        out = leg(self.query_text, 1.0)
-        if self.aux_text_col:
-            aux_w = (
-                self._aux_weight_expr()
-                if self.scale_aux_weight
-                else self.aux_weight
-            )
-            out = out.unionByName(leg(self.aux_text_col, aux_w))
+            out = leg if out is None else out.unionByName(leg)
         return out
 
     def _finalize(self, scores: DataFrame) -> DataFrame:
@@ -910,14 +1076,10 @@ class Bm25Search(Pipe):
         postings = self._index()
         if self._maxscore_eligible():
             return self._transform_maxscore(df, postings)
-        parts = [self._scored(df, self.query_text, 1.0, postings)]
-        if self.aux_text_col:
-            aux_w = (
-                self._aux_weight_expr()
-                if self.scale_aux_weight
-                else self.aux_weight
-            )
-            parts.append(self._scored(df, self.aux_text_col, aux_w, postings))
+        parts = [
+            self._scored(df, text_col, wcol, postings)
+            for text_col, wcol in self._legs()
+        ]
         all_terms = parts[0]
         for p in parts[1:]:
             all_terms = all_terms.unionByName(p)

@@ -18,6 +18,21 @@ query batch) ranking pays the full scoring cost and stores the top-k
 table (k x |Q| rows — trivially small); every later panel serves it from
 Parquet, so an agreement audit costs one join, not two retrievals.
 
+A miss runs the retrieval plan exactly ONCE and eagerly. A bounded
+query batch (at most ``MAX_QUERY_ROWS`` rows, made driver-local once by
+``ml.similarity.local_batch``) has a k x |Q| table that fits the driver:
+it comes there as Arrow (``toArrow``), publishes through
+``CacheManager.store`` (a driver-local frame is written with pyarrow —
+no Spark write job, same staging-dir + atomic-rename protocol), and the
+caller gets the same rows back as an Arrow-backed ``LocalRelation``, whose
+collect runs no job and which holds no persisted plan. A larger batch
+stays distributed: ``store`` writes the table with Spark and the caller
+reads the published entry. Neither path persists anything. The trade-off:
+evaluation is eager, so a multi-panel plan that calls this for several
+legs (q138's BM25 and dense legs, say) runs those legs one after the
+other instead of letting the DAG scheduler overlap them in wall time.
+Every leg's own stages are still parallel, and nothing runs twice.
+
 Measurement honesty: results reuse is a real production win but must not
 silently turn engine bench rows warm — ``bench.py`` and the soak/scaling
 harnesses call :func:`clear_results_cache` before timing, so their first
@@ -40,6 +55,7 @@ from warp_pipes_spark.core.fingerprint import (
     get_fingerprint,
 )
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.ml.similarity import local_batch
 from warp_pipes_spark.pipes.cache import CachedPipe, CacheManager
 
 
@@ -53,15 +69,7 @@ def results_cache_dir() -> str:
 
 
 def clear_results_cache() -> None:
-    # a write-behind publish landing AFTER the wipe would resurrect its
-    # entry into the "cold" cache — drain the queue first
-    from warp_pipes_spark.pipes.cache import _inflight, _wait_inflight_publishes
-
-    _wait_inflight_publishes()
-    rdir = results_cache_dir()
-    for key in [k for k in list(_inflight) if k[0] == rdir]:
-        _inflight.pop(key, None)
-    shutil.rmtree(rdir, ignore_errors=True)
+    shutil.rmtree(results_cache_dir(), ignore_errors=True)
 
 
 def cached_results(
@@ -81,7 +89,11 @@ def cached_results(
     (score desc, id asc tie-break), so the top-k list IS a prefix of the
     top-k' list. An MRR@10 panel after a fused k=20 run costs one
     filtered read, not a retrieval. Engines without an integer ``k`` or
-    a ``rank`` output column fall back to exact-config memoization."""
+    a ``rank`` output column fall back to exact-config memoization.
+
+    A miss on a bounded batch (``local_batch``) returns a
+    ``LocalRelation`` of the computed rows (see the module notes); a
+    batch above the bound is written by Spark and served from the entry."""
     manager = CacheManager(cache_dir or results_cache_dir())
     input_fp = get_fingerprint(
         {
@@ -100,14 +112,12 @@ def cached_results(
     )
     prefix = family + "_k"
     spark = queries.sparkSession
-    # smallest cached depth that covers the request = cheapest read;
-    # in-flight write-behind entries count (manager serves them live)
+    # smallest cached depth that covers the request = cheapest read
     best = None
     try:
         names = os.listdir(manager.cache_dir)
     except OSError:
         names = []
-    names = set(names) | set(manager.inflight_names())
     for name in names:
         if not name.startswith(prefix):
             continue
@@ -126,6 +136,8 @@ def cached_results(
 
             out = out.filter(F.col("rank") <= k)
         return out
+    # a bounded batch plans over ONE driver-local copy (see module notes)
+    queries = local_batch(queries)
     out = pipe(queries)
     if "rank" not in out.columns:
         from warp_pipes_spark.core.fingerprint import combine_fingerprints
@@ -136,21 +148,13 @@ def cached_results(
             lambda: out,
             meta={"pipe": type(pipe).__name__},
         )
-    # write-behind publish (guide §2.6 overlap): the first panel's OWN
-    # consumption runs from the live (persisted) plan while the cache
-    # entry publishes on a background thread — an eager store here
-    # serialized the whole retrieval job AHEAD of every independent
-    # sibling branch of the calling panel (q138's dense leg waited for
-    # the BM25 leg's store to finish before its own stages could start;
-    # as one lazy plan the DAG scheduler overlaps them). Later panels
-    # load the published artifact as before; racing writers are safe
-    # (atomic staging rename, content-identical losers discarded).
-    # release=False: the returned live plan may be referenced several
-    # times after the publish completes (PRF's feedback pass), and the
-    # persisted table is only k x |Q| rows — clearCache/GC reclaims it
-    return manager.store_async(
-        out,
-        f"{prefix}{k}",
-        meta={"pipe": type(pipe).__name__, "k": k},
-        release=False,
+    if queries.isLocal():
+        # run the plan ONCE: the k x |Q| table of a bounded batch comes to
+        # the driver as Arrow, the entry publishes from it with pyarrow (no
+        # Spark write), and the caller gets the same rows as a
+        # LocalRelation (no job to collect). A larger batch stays
+        # distributed: one Spark write, then a load of the entry.
+        out = spark.createDataFrame(out.toArrow(), schema=out.schema)
+    return manager.store(
+        out, f"{prefix}{k}", meta={"pipe": type(pipe).__name__, "k": k}
     )
