@@ -51,6 +51,36 @@ def test_fingerprint_path_changes_with_content(tmp_path):
     assert fingerprint_path(str(p)) != fp1
 
 
+def test_fingerprint_same_size_rewrite_within_one_second(spark, tmp_path):
+    """Writers reuse the part-file name (``part-00000.parquet``), so a
+    same-size rewrite landing within the same second as the original must
+    still change both the path and the plan fingerprint."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from warp_pipes_spark.core.fingerprint import fingerprint_dataframe
+
+    d = tmp_path / "snap"
+    d.mkdir()
+    part = str(d / "part-00000.parquet")
+    second = 1_700_000_000 * 10**9
+
+    def write(value, ns):
+        pq.write_table(pa.table({"x": [value]}), part)
+        os.utime(part, ns=(ns, ns))
+
+    write(1, second + 100)
+    size = os.path.getsize(part)
+    fp_path = fingerprint_path(str(d))
+    fp_df = fingerprint_dataframe(spark.read.parquet(str(d)))
+    write(2, second + 200)
+    assert os.path.getsize(part) == size  # the case under test
+    assert fingerprint_path(str(d)) != fp_path
+    assert fingerprint_dataframe(spark.read.parquet(str(d))) != fp_df
+
+
 def test_fingerprint_dataframe_lambda_counter_invariant(spark, tmp_path):
     """PySpark numbers higher-order-function lambda variables with a
     session-GLOBAL counter (``lambda x_1`` in a fresh session, ``x_417``
@@ -175,39 +205,6 @@ def test_cache_vacuum_bytes_evicts_oldest_until_under_budget(spark, docs, tmp_pa
     assert not mgr.exists("middle") and not mgr.exists("newest")
 
 
-def test_cache_store_async_logs_publish_failure(spark, docs, tmp_path, caplog):
-    """A failing write-behind publish must not fail the query but must
-    leave a warning (silent-retrain visibility), and the persist taken for
-    plan-sharing must be released."""
-    import logging
-    import time as _time
-
-    mgr = CacheManager(str(tmp_path / "cf"))
-
-    # force the background store() to fail deterministically (a read-only
-    # cache dir won't do it: tests run as root, which bypasses mode bits)
-    def boom(df, fingerprint, meta=None):
-        raise RuntimeError("disk full")
-
-    mgr.store = boom
-    with caplog.at_level(logging.WARNING, logger="warp_pipes_spark.pipes.cache"):
-        out = mgr.store_async(docs, "doomed")
-        assert out.count() == docs.count()  # foreground query unaffected
-        for _ in range(100):  # wait for the background publish attempt
-            if any("publish failed" in r.message for r in caplog.records):
-                break
-            _time.sleep(0.1)
-    assert any("publish failed" in r.message for r in caplog.records)
-    # the persist taken for plan-sharing was released after the attempt
-    for _ in range(100):
-        lvl = docs.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            break
-        _time.sleep(0.1)
-    lvl = docs.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)
-
-
 def test_cache_concurrent_writers_race(spark, docs, tmp_path):
     """Two writers publishing the same fingerprint: one atomic rename wins,
     the loser discards its (content-identical) staging dir — no partial
@@ -242,20 +239,76 @@ def test_cache_concurrent_writers_race(spark, docs, tmp_path):
     assert mgr.exists("contended")
 
 
-def test_store_async_serves_frame_and_publishes(spark, docs, tmp_path):
-    import time as _time
+def test_get_or_compute_computes_once(spark, docs, tmp_path):
+    """The compute thunk runs on the cold call only; the warm call loads
+    the published artifact."""
+    from warp_pipes_spark.pipes.cache import _load_memo
 
-    from warp_pipes_spark.pipes.cache import CacheManager
+    mgr = CacheManager(str(tmp_path / "goc"))
+    calls = []
 
-    mgr = CacheManager(str(tmp_path / "wb"))
-    out = mgr.store_async(docs, "behind")
-    # the caller's frame is usable immediately (write-behind)
-    assert out.count() == docs.count()
-    deadline = _time.time() + 30
-    while not mgr.exists("behind") and _time.time() < deadline:
-        _time.sleep(0.2)
-    assert mgr.exists("behind"), "background publish never landed"
-    assert len(mgr.load(spark, "behind").collect()) == docs.count()
+    def compute():
+        calls.append(1)
+        return docs.select("row_id", "text")
+
+    cold = mgr.get_or_compute(spark, "entry", compute)
+    _load_memo.clear()
+    warm = mgr.get_or_compute(spark, "entry", compute)
+    assert len(calls) == 1
+    assert sorted(cold.collect()) == sorted(warm.collect()) == sorted(docs.collect())
+
+
+@pytest.mark.parametrize("engine", ["lsh", "ivf", "pq"])
+def test_vector_index_cold_publish_matches_warm_load(spark, tmp_path, engine):
+    """LSH buckets, IVF centroids + lists and PQ codebooks + codes publish
+    synchronously: the cold call (build + publish) returns the same rows
+    as a warm call over the published artifacts, every artifact lands in
+    exactly one published directory with no staging leftovers, and no
+    persisted plan is left behind."""
+    import os
+
+    from warp_pipes_spark.ml.quantize import PqCosineTopK
+    from warp_pipes_spark.ml.similarity import IvfCosineTopK, LshCosineTopK
+    from warp_pipes_spark.pipes.cache import _load_memo
+
+    rng = np.random.RandomState(3)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(8)]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.filter(F.col("vec_id") < 10)
+    index_dir = str(tmp_path / "index")
+    centroid_dir = str(tmp_path / "centroids")
+
+    def run():
+        if engine == "lsh":
+            eng = LshCosineTopK(
+                corpus=corpus, k=5, dim=8, n_planes=4, n_tables=4,
+                index_cache_dir=index_dir,
+            )
+        elif engine == "ivf":
+            eng = IvfCosineTopK(
+                corpus=corpus, k=5, n_centroids=4, n_probe=2,
+                centroid_cache_dir=centroid_dir, index_cache_dir=index_dir,
+            )
+        else:
+            eng = PqCosineTopK(corpus=corpus, k=5, m=4, index_cache_dir=index_dir)
+        return sorted(map(tuple, eng(queries).collect()))
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    cold = run()
+    _load_memo.clear()
+    warm = run()
+    assert cold and cold == warm
+
+    expected = {"lsh": {index_dir: 1}, "ivf": {index_dir: 1, centroid_dir: 1},
+                "pq": {index_dir: 2}}[engine]
+    for d, n in expected.items():
+        names = os.listdir(d)
+        assert not [x for x in names if ".staging-" in x], names
+        assert len(names) == n, names
+        assert all(os.path.exists(os.path.join(d, x, "_SUCCESS")) for x in names)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted
 
 
 def test_bounded_query_collect_guard(spark):

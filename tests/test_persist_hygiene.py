@@ -83,6 +83,5 @@ def test_cached_results_persist_count_stays_flat(spark, tmp_path):
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     for b in range(1, 4):
         serve(b)
-    # a leak grows the count; it may shrink meanwhile, when an earlier
-    # write-behind publish (an index artifact) releases its persist
+    # a leak grows the count
     assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before

@@ -71,7 +71,8 @@ def get_fingerprint(obj: Any) -> str:
 
 def fingerprint_path(path: str) -> str:
     """Cheap stable snapshot hash of an on-disk dataset: file list + sizes +
-    mtimes. Replaces the reference's HF dataset `_fingerprint` for Parquet
+    nanosecond mtimes (writers reuse part-file names, so a same-size
+    rewrite within one second must still change the key). Replaces the reference's HF dataset `_fingerprint` for Parquet
     inputs; O(#files), never scans data (100 TB-safe)."""
     entries = []
     if os.path.isdir(path):
@@ -83,11 +84,11 @@ def fingerprint_path(path: str) -> str:
             for f in sorted(files):
                 p = os.path.join(root, f)
                 st = os.stat(p)
-                entries.append((os.path.relpath(p, path), st.st_size, int(st.st_mtime)))
+                entries.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
         entries.sort()
     elif os.path.exists(path):
         st = os.stat(path)
-        entries.append((os.path.basename(path), st.st_size, int(st.st_mtime)))
+        entries.append((os.path.basename(path), st.st_size, st.st_mtime_ns))
     else:
         entries.append(("__missing__", path, 0))
     return fingerprint_struct(entries)
@@ -152,7 +153,7 @@ def _fingerprint_dataframe_uncached(df: Any) -> str:
         local = f[len("file://"):] if f.startswith("file://") else f
         try:
             st = os.stat(local)
-            stats.append((f, st.st_size, int(st.st_mtime)))
+            stats.append((f, st.st_size, st.st_mtime_ns))
         except OSError:  # non-local FS: the name alone still keys rewrites
             stats.append((f, -1, -1))
     struct: dict = {"plan": canon, "files": stats}

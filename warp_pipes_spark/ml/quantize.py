@@ -328,10 +328,11 @@ class PqCosineTopK(Pipe):
             }
         )
         if not (manager.exists(fp + "_codes") and manager.exists(fp + "_books")):
-            # write-behind: the freshly trained codebooks and the in-memory
-            # codes plan serve THIS call while both artifacts publish
-            # concurrently (float64 round-trips Parquet exactly); later
-            # sessions load them
+            # both artifacts publish before this call queries them. The
+            # codebooks are a driver-local frame (pyarrow, no Spark job)
+            # and the trained matrix serves this call directly (float64
+            # round-trips Parquet exactly); the codes are read back from
+            # their artifact. A failed write raises
             pq = ProductQuantizer(dim, m=self.m, k=self.n_codes, seed=self.seed).fit(
                 self.corpus, self.corpus_vec, self.corpus_id, self.train_sample
             )
@@ -340,18 +341,19 @@ class PqCosineTopK(Pipe):
                 for j in range(pq.codebooks.shape[0])
                 for c in range(pq.codebooks.shape[1])
             ]
-            manager.store_async(
+            manager.store(
                 spark.createDataFrame(
                     book_rows, "j int, c int, centroid array<double>"
                 ),
                 fp + "_books",
             )
-            codes = manager.store_async(
-                self.corpus.select(
+            codes = manager.get_or_compute(
+                spark,
+                fp + "_codes",
+                lambda: self.corpus.select(
                     F.col(self.corpus_id).alias("neighbor_id"),
                     pq.encode_udf()(F.col(self.corpus_vec)).alias("codes"),
                 ),
-                fp + "_codes",
             )
             return pq.codebooks, codes
         book_rows = sorted(

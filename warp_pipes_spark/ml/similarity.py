@@ -451,11 +451,9 @@ class LshCosineTopK(Pipe):
                 "plane_family": self.plane_family,
             }
         )
-        if not manager.exists(fp):
-            # write-behind: this call queries the in-memory hash tables
-            # while the artifact publishes concurrently; later sessions load
-            return manager.store_async(ce, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        # a cold call publishes the tables before it queries them (from
+        # the published artifact); a failed write raises
+        return manager.get_or_compute(self.corpus.sparkSession, fp, lambda: ce)
 
     def _planes(self) -> np.ndarray:
         if self.plane_family == "md5":
@@ -857,10 +855,10 @@ class IvfCosineTopK(Pipe):
         if not manager.exists(fp):
             C = self._train_centroids()
             rows = [(i, [float(x) for x in C[i]]) for i in range(len(C))]
-            # write-behind: the freshly trained matrix IS what a reload
-            # would return (float64 -> Parquet double round-trips exactly),
-            # so serve it directly while the artifact publishes
-            manager.store_async(
+            # a driver-local frame: published with pyarrow, no Spark job.
+            # The trained matrix IS what a reload returns (float64 ->
+            # Parquet double round-trips exactly), so serve it directly
+            manager.store(
                 spark.createDataFrame(rows, "cell int, centroid array<double>"), fp
             )
             return C
@@ -985,11 +983,9 @@ class IvfCosineTopK(Pipe):
                 "assign": self.assign_family,
             }
         )
-        if not manager.exists(fp):
-            # write-behind: serve this call from the in-memory lists while
-            # the artifact publishes concurrently; later sessions load
-            return manager.store_async(ce, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        # a cold call publishes the lists before it queries them (from
+        # the published artifact); a failed write raises
+        return manager.get_or_compute(self.corpus.sparkSession, fp, lambda: ce)
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         centroids = self._centroids()

@@ -8,6 +8,12 @@ transform is memoized under ``hash(input_fingerprint, pipe_fingerprint)``
 Spark has no content-addressed cross-session cache, so this module is the
 custom piece: a driver-side manager mapping fingerprints to Parquet paths.
 
+One publish path: ``CacheManager.store`` writes into a private staging
+directory and publishes it with one atomic rename; build-once artifacts
+go through ``get_or_compute`` (load if published, else compute + store).
+A publish is synchronous: a failed write raises in the call that built
+the artifact.
+
 Completeness: the reference validates its zarr store by scanning for
 all-zero chunks (``caching.py:237-260``); Parquet writes are atomic at the
 job level (output committer), so existence of ``_SUCCESS`` is the
@@ -17,12 +23,9 @@ completeness check — no data scan needed.
 from __future__ import annotations
 
 import json
-import logging
 import os
 import time
 from typing import Callable, Optional
-
-logger = logging.getLogger(__name__)
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,26 +50,11 @@ from warp_pipes_spark.core.pipe import Pipe
 # inputs inside the run that uses it.
 _load_memo: dict = {}
 
-# (cache_dir, fingerprint) -> [DataFrame, Thread] for write-behind
-# publishes still in flight. Between store_async() returning and the
-# background rename landing, the entry is not yet on disk — a
-# same-session reader (the next query over a fresh LSH table or IVF
-# list) would MISS, silently rebuild the artifact it was supposed to
-# reuse, and race a duplicate staging write. Serving the live
-# (persisted) plan from this registry is exact: it is the very
-# DataFrame being published.
-_inflight: dict = {}
-
-
 def _wait_inflight_publishes(timeout: float = 60.0) -> None:
-    """Join every in-flight write-behind publish thread (bounded)."""
-    for entry in list(_inflight.values()):
-        th = entry[1]
-        if th is not None:
-            try:
-                th.join(timeout)
-            except Exception:
-                pass
+    """No-op kept for ``perfbench/run.py``, which imports and calls it:
+    every publish is synchronous, so nothing is ever in flight. Delete it
+    together with the benchmark's patching when tracing moves into the
+    library (ROADMAP direction 2)."""
 
 
 def clear_all_artifact_caches() -> None:
@@ -84,10 +72,6 @@ def clear_all_artifact_caches() -> None:
     import shutil
     import tempfile
 
-    # a publish landing AFTER the wipe would resurrect its artifact into
-    # the "cold" cache — drain the write-behind queue first
-    _wait_inflight_publishes()
-    _inflight.clear()
     _load_memo.clear()
     for d in glob.glob(
         os.path.join(tempfile.gettempdir(), "warp_pipes_spark_*")
@@ -129,12 +113,14 @@ def _write_local(df: DataFrame, staging: str) -> bool:
 class CacheManager:
     """Content-addressed Parquet cache: ``cache_dir/<fingerprint>/``.
 
-    ``store`` is ATOMIC at the directory level: the dataset is written to a
-    private staging dir and published with one ``os.rename``, so a
-    concurrent reader either sees the complete published artifact (with
-    ``_SUCCESS``) or nothing — never a half-written cache entry. If two
-    writers race, the loser keeps the winner's (content-identical)
-    artifact and discards its own staging dir."""
+    ``store`` is the one publish path and is ATOMIC at the directory
+    level: the dataset is written to a private staging dir and published
+    with one ``os.rename``, so a concurrent reader either sees the
+    complete published artifact (with ``_SUCCESS``) or nothing — never a
+    half-written cache entry. If two writers race, the loser keeps the
+    winner's (content-identical) artifact and discards its own staging
+    dir. Build-once artifacts call ``get_or_compute``; the publish runs
+    before the call returns, and a failed write raises."""
 
     def __init__(self, cache_dir: str):
         self.cache_dir = cache_dir
@@ -144,14 +130,9 @@ class CacheManager:
         return os.path.join(self.cache_dir, fingerprint)
 
     def exists(self, fingerprint: str) -> bool:
-        if (self.cache_dir, fingerprint) in _inflight:
-            return True
         return os.path.exists(os.path.join(self.path_for(fingerprint), "_SUCCESS"))
 
     def load(self, spark: SparkSession, fingerprint: str) -> DataFrame:
-        entry = _inflight.get((self.cache_dir, fingerprint))
-        if entry is not None:
-            return entry[0]
         path = self.path_for(fingerprint)
         key = self._memo_key(spark, path)
         if key is not None:
@@ -231,77 +212,12 @@ class CacheManager:
         meta: Optional[dict] = None,
         release: bool = True,
     ) -> DataFrame:
-        """Write-behind publish: kick the Parquet write to a background
-        thread and return ``df`` itself immediately, so the FIRST query
-        over a freshly built artifact (LSH tables, IVF lists) is served
-        from the in-memory plan while the artifact publishes concurrently
-        — later sessions ``load`` it. The atomic staging-dir rename makes
-        racing writers (including a second cold caller in this session)
-        safe: one publishes, the others discard content-identical staging
-        dirs. Falls back to a synchronous ``store`` if the Spark thread
-        machinery is unavailable. Publish failures don't fail the query
-        (the cache is a memo, not the result — the next cold call simply
-        rebuilds) but ARE logged at warning level so a persistently
-        failing publish (full disk, bad permissions) is visible instead
-        of silently retraining every session.
-
-        ``df`` is persisted before the fork so the background write and
-        the foreground query share one materialization of the plan —
-        without this an expensive plan (e.g. a PQ encode UDF over the
-        whole corpus) executes at least twice, competing for the same
-        executors. The persist is released once the publish completes.
-        ``release`` is accepted for existing callers and has no effect."""
-
-        we_persisted = False
-        try:
-            lvl = df.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                df.persist()
-                we_persisted = True
-        except Exception:
-            pass
-
-        inflight_key = (self.cache_dir, fingerprint)
-        inflight_entry = [df, None]
-
-        def _publish():
-            try:
-                self.store(df, fingerprint, meta)
-            except Exception:
-                logger.warning(
-                    "write-behind cache publish failed for %s (artifact will "
-                    "be rebuilt next session)",
-                    fingerprint,
-                    exc_info=True,
-                )
-            finally:
-                _inflight.pop(inflight_key, None)
-                if we_persisted:
-                    try:
-                        df.unpersist(blocking=False)
-                    except Exception:
-                        pass
-
-        try:
-            from pyspark import InheritableThread
-
-            # registered BEFORE start so a reader never sees a gap; the
-            # publish thread pops this same (mutated-in-place) entry
-            _inflight[inflight_key] = inflight_entry
-            t = InheritableThread(target=_publish, daemon=True)
-            t.start()
-            inflight_entry[1] = t
-        except Exception:
-            # sync fallback: _publish never runs, so release the persist
-            # here — otherwise every fallback call leaks a cached plan
-            _inflight.pop(inflight_key, None)
-            if we_persisted:
-                try:
-                    df.unpersist(blocking=False)
-                except Exception:
-                    pass
-            return self.store(df, fingerprint, meta)
-        return df
+        """Synchronous alias of ``store``, kept only because
+        ``perfbench/trace.py`` patches and calls it by name. Nothing in
+        this package calls it; ``release`` is ignored. Delete it together
+        with the benchmark's patching when tracing moves into the library
+        (ROADMAP direction 2)."""
+        return self.store(df, fingerprint, meta)
 
     def get_or_compute(
         self,
@@ -310,6 +226,9 @@ class CacheManager:
         compute: Callable[[], DataFrame],
         meta: Optional[dict] = None,
     ) -> DataFrame:
+        """The published artifact under ``fingerprint``: loaded if it
+        exists, else ``compute()`` is built, stored and returned as
+        ``store`` returns it. ``compute`` runs only on a miss."""
         if self.exists(fingerprint):
             return self.load(spark, fingerprint)
         return self.store(compute(), fingerprint, meta)

@@ -93,9 +93,16 @@ _tz_pinned: "weakref.WeakSet" = weakref.WeakSet()
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # timestamps must be interpreted identically to DuckDB's naive
-    # reading; pin the timezone ONCE per session instead of paying a
-    # py4j conf round trip at every one of the 250 T() call sites
+    """Load catalog table ``name`` from ``sf_dir``, with the session's
+    timezone pinned to UTC.
+
+    Invariant: the pin is set once per session (the first ``T`` call on
+    it), not per call. Code that changes ``spark.sql.session.timeZone``
+    on that session afterwards is not undone, and every later timestamp
+    comparison against DuckDB (which reads timestamps naively, as UTC)
+    breaks."""
+    # the once-per-session pin saves a py4j conf round trip at every one
+    # of the 250 T() call sites
     try:
         pinned = spark in _tz_pinned
     except TypeError:

@@ -238,14 +238,14 @@ class Bm25Search(Pipe):
         if ap is not None:
             base_eng, new_docs = ap
             fp_delta = fp_raw + "delta"
-            if not manager.exists(fp_delta):
-                new_raw = type(self)(
+            new_raw = manager.get_or_compute(
+                self.corpus.sparkSession,
+                fp_delta,
+                lambda: type(self)(
                     corpus=new_docs, **self._ctor_kwargs()
-                )._postings()
-                manager.store(new_raw, fp_delta)
-            return base_eng._raw_postings().unionByName(
-                manager.load(self.corpus.sparkSession, fp_delta)
+                )._postings(),
             )
+            return base_eng._raw_postings().unionByName(new_raw)
         raw = self._postings().persist(StorageLevel.MEMORY_AND_DISK)
         out = manager.store(raw, fp_raw)
         raw.unpersist()
@@ -583,13 +583,11 @@ class Bm25Search(Pipe):
                 self._ts_long(F.col("score_d")).alias("ts"),
             )
         )
-        if self.materialize_index:
-            manager = CacheManager(self.index_cache_dir)
-            fp_seed = self._seed_fingerprint()
-            if not manager.exists(fp_seed):
-                manager.store(seed, fp_seed)
-            seed = manager.load(self.corpus.sparkSession, fp_seed)
-        return seed
+        if not self.materialize_index:
+            return seed
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession, self._seed_fingerprint(), lambda: seed
+        )
 
     def _n_postings(self, stats: DataFrame) -> int:
         """Total posting count ``sum(df)`` — an index-intrinsic scalar the
@@ -719,13 +717,13 @@ class Bm25Search(Pipe):
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("df"))
         )
-        if self.materialize_index:
-            manager = CacheManager(self.index_cache_dir)
-            fp = self._index_fingerprint() + "_termdf"
-            if not manager.exists(fp):
-                manager.store(stats, fp)
-            stats = manager.load(self.corpus.sparkSession, fp)
-        return stats
+        if not self.materialize_index:
+            return stats
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession,
+            self._index_fingerprint() + "_termdf",
+            lambda: stats,
+        )
 
     def _transform_maxscore(self, df: DataFrame, postings: DataFrame) -> DataFrame:
         """Top-k retrieval with champion-seeded threshold pruning — the

@@ -135,14 +135,13 @@ class BooleanSearch(Pipe):
 
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint()
-        if not manager.exists(fp):
-            manager.store(
-                built.repartitionByRange("term").sortWithinPartitions(
-                    "term"
-                ),
-                fp,
-            )
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(
+            self.corpus.sparkSession,
+            fp,
+            lambda: built.repartitionByRange("term").sortWithinPartitions(
+                "term"
+            ),
+        )
 
     def _term_stats(self, posting: DataFrame) -> DataFrame:
         """(term, __df) document frequencies — the vocabulary-sized table
@@ -157,9 +156,7 @@ class BooleanSearch(Pipe):
 
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_termdf"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(self.corpus.sparkSession, fp, lambda: built)
 
     def _n_docs(self, posting: DataFrame) -> int:
         """|distinct indexed docs| — the dense plan's pair-count factor.

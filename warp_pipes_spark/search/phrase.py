@@ -118,14 +118,13 @@ class PhraseSearch(Pipe):
 
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint()
-        if not manager.exists(fp):
-            manager.store(
-                built.repartitionByRange("term").sortWithinPartitions(
-                    "term"
-                ),
-                fp,
-            )
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(
+            self.corpus.sparkSession,
+            fp,
+            lambda: built.repartitionByRange("term").sortWithinPartitions(
+                "term"
+            ),
+        )
 
     def _term_df(self, posting: DataFrame) -> DataFrame:
         """term -> document-position frequency (vocabulary-sized), the
@@ -139,9 +138,7 @@ class PhraseSearch(Pipe):
 
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_df"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(self.corpus.sparkSession, fp, lambda: built)
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         from warp_pipes_spark.text.analysis import tokens_expr

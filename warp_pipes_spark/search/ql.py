@@ -191,15 +191,11 @@ class DirichletQLSearch(Pipe):
             .filter(F.col("__cr") <= C)
             .drop("__cr", "dl")
         )
-        if self.materialize_index:
-            manager = CacheManager(
-                self.index_cache_dir or _default_index_cache_dir()
-            )
-            fp = self._ql_fingerprint() + f"_seed_{C}"
-            if not manager.exists(fp):
-                manager.store(seed, fp)
-            seed = manager.load(self.corpus.sparkSession, fp)
-        return seed
+        if not self.materialize_index:
+            return seed
+        manager = CacheManager(self.index_cache_dir or _default_index_cache_dir())
+        fp = self._ql_fingerprint() + f"_seed_{C}"
+        return manager.get_or_compute(self.corpus.sparkSession, fp, lambda: seed)
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         scored = self._scored_postings()

@@ -270,17 +270,15 @@ class TrigramSubstringSearch(Pipe):
 
             manager = CacheManager(self.index_cache_dir)
             fp = self._index_fingerprint() + "_delta"
-            if not manager.exists(fp):
-                # delta-sized shuffle: cluster just the new rows by gram
-                manager.store(
-                    delta_built.repartitionByRange(
-                        "gram"
-                    ).sortWithinPartitions("gram"),
-                    fp,
-                )
-            return base_eng._posting().unionByName(
-                manager.load(self.corpus.sparkSession, fp)
+            # delta-sized shuffle: cluster just the new rows by gram
+            delta_posting = manager.get_or_compute(
+                self.corpus.sparkSession,
+                fp,
+                lambda: delta_built.repartitionByRange(
+                    "gram"
+                ).sortWithinPartitions("gram"),
             )
+            return base_eng._posting().unionByName(delta_posting)
         built = self.corpus.select(
             F.col(self.corpus_id).alias("doc_id"),
             F.explode(g(F.col(self.corpus_text))).alias("gram"),
@@ -291,16 +289,15 @@ class TrigramSubstringSearch(Pipe):
 
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint()
-        if not manager.exists(fp):
-            # one-time corpus-sized shuffle to gram-cluster the index
-            # files; every later batch reads back a pruned slice
-            manager.store(
-                built.repartitionByRange("gram").sortWithinPartitions(
-                    "gram"
-                ),
-                fp,
-            )
-        return manager.load(self.corpus.sparkSession, fp)
+        # one-time corpus-sized shuffle to gram-cluster the index files;
+        # every later batch reads back a pruned slice
+        return manager.get_or_compute(
+            self.corpus.sparkSession,
+            fp,
+            lambda: built.repartitionByRange("gram").sortWithinPartitions(
+                "gram"
+            ),
+        )
 
     def _gram_df(self, posting: DataFrame) -> DataFrame:
         """gram -> document frequency stats (vocabulary-sized), derived
@@ -314,9 +311,7 @@ class TrigramSubstringSearch(Pipe):
             return built
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_df"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(self.corpus.sparkSession, fp, lambda: built)
 
     def _n_docs(self, posting: DataFrame) -> int:
         """|distinct indexed docs| — the dense-regime pair-count factor.
@@ -633,9 +628,7 @@ class TrigramSimilaritySearch(Pipe):
             return built
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_ndoc"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(self.corpus.sparkSession, fp, lambda: built)
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         import math

@@ -11,7 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_driver_mem() -> str:
+    """About a third of the host's memory, capped at 24g: in local mode
+    the driver heap is every task's heap, and a heap near the host's size
+    gets the JVM OOM-killed by the kernel once it grows."""
+    try:
+        with open("/proc/meminfo") as f:
+            mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{max(1024, min(24 * 1024, mem_kb // 1024 // 3))}m"
+
+
+# SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override the host-sized defaults
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -50,8 +64,11 @@ def get_spark(
         # keep driver output deterministic for tests
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver heap IS the executor heap for all worker
-        # threads — size it for 32 concurrent tasks, not for a driver
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # threads — size it for the concurrent tasks, not for a driver
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # managed-table warehouse (bucketed tables) kept out of the repo
         .config(

@@ -175,9 +175,7 @@ def shingle_table(
             "n": n,
         }
     )
-    if not manager.exists(fp):
-        manager.store(built, fp)
-    return manager.load(df.sparkSession, fp)
+    return manager.get_or_compute(df.sparkSession, fp, lambda: built)
 
 
 class ExactDedup(Pipe):
@@ -383,9 +381,7 @@ class NgramJaccardDedup(Pipe):
                 "max_df": self.max_df,
             }
         )
-        if not manager.exists(fp):
-            manager.store(out, fp)
-        return manager.load(df.sparkSession, fp)
+        return manager.get_or_compute(df.sparkSession, fp, lambda: out)
 
     def _candidates_prefix(self, inv: DataFrame, sizes: DataFrame) -> DataFrame:
         """AllPairs/PPJoin prefix filtering (exact): under a global
@@ -1115,9 +1111,9 @@ class SimHashDedup(Pipe):
                     "hash_family": self.hash_family,
                 }
             )
-            if not manager.exists(fp):
-                manager.store(self._signatures(df), fp)
-            sig = manager.load(df.sparkSession, fp)
+            sig = manager.get_or_compute(
+                df.sparkSession, fp, lambda: self._signatures(df)
+            )
         else:
             sig = self._signatures(df)
             if self.persist:
